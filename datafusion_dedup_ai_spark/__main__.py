@@ -107,6 +107,8 @@ def curate_main(argv: list[str], spark=None) -> int:
     per-split stats.json, prints the stats table."""
     import json
 
+    from pyspark import StorageLevel
+
     from datafusion_dedup_ai_spark.queries_curation import (
         training_manifest_frame,
     )
@@ -116,6 +118,7 @@ def curate_main(argv: list[str], spark=None) -> int:
     owns_session = spark is None
     if owns_session:
         spark = build_session(app_name="curate-cli")
+    spread = False
     try:
         docs = spark.read.parquet(args.docs)
         missing = {"doc_id", "text"} - set(docs.columns)
@@ -125,6 +128,15 @@ def curate_main(argv: list[str], spark=None) -> int:
                 file=sys.stderr,
             )
             return 1
+        # A single-file parquet plans as one input split, so the per-row
+        # text scoring would run as one task. Spread it over the cores and
+        # cache the spread rows: the optimizer pushes the quality/language
+        # filter below a bare repartition, back onto the single scan task.
+        # A many-split input keeps its own partitioning (no extra shuffle).
+        par = spark.sparkContext.defaultParallelism
+        spread = docs.rdd.getNumPartitions() < par
+        if spread:
+            docs = docs.repartition(par).persist(StorageLevel.MEMORY_AND_DISK)
         out_dir = args.out or os.path.join(
             os.path.dirname(os.path.abspath(args.docs)), "curated"
         )
@@ -198,6 +210,8 @@ def curate_main(argv: list[str], spark=None) -> int:
         print(f"Manifest written to: {out_dir}")
         return 0
     finally:
+        if spread:
+            docs.unpersist()
         if owns_session:
             spark.stop()
 

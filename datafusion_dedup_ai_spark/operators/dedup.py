@@ -134,19 +134,29 @@ def minhash_signatures(
     )
 
 
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature positions per LSH band. Raises unless the bands tile the
+    signature exactly: with bands > num_hashes every band would hash an
+    empty slice (one bucket per band, a quadratic candidate join), and a
+    remainder would silently leave the trailing hashes out of every band."""
+    if bands < 1 or num_hashes % bands != 0:
+        raise ValueError(
+            f"bands={bands} must be >= 1 and divide num_hashes={num_hashes}"
+        )
+    return num_hashes // bands
+
+
 def band_buckets(
     signatures: DataFrame,
     id_col: str = "doc_id",
     sig_col: str = "sig",
     bands: int = 16,
     rows_per_band: int = 4,
-    out_id: str | None = None,
 ) -> DataFrame:
-    """(out_id, band, bucket): one row per (doc, band), bucket =
+    """(id, band, bucket): one row per (doc, band), bucket =
     xxhash64(band's signature slice). Pure column work over (id, sig) — no
     shingle or text access, which is what lets the persisted signature index
     serve candidate generation without rescanning the corpus."""
-    out_id = out_id or id_col
     band_cols = []
     for b in range(bands):
         chunk = F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band)
@@ -154,8 +164,49 @@ def band_buckets(
             F.struct(F.lit(b).alias("band"), F.xxhash64(chunk).alias("bucket"))
         )
     return signatures.select(
-        F.col(id_col).alias(out_id), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(out_id, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
+    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
+def banded_candidates(
+    left: DataFrame,
+    keys: list[str],
+    id_col: str,
+    right: DataFrame | None = None,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Distinct (id_a, id_b) pairs of rows that share all of ``keys`` — the
+    one candidate join under every banded tier (MinHash bands, SimHash
+    chunks, hyperplane-LSH tables, IVF cells, both persisted indexes).
+
+    ``left`` (and ``right``) hold ``(id, *keys)`` rows. With no ``right`` it
+    is a self-join emitting id_a < id_b; with a ``right`` it emits every
+    left x right pair (id_a from left, id_b from right; a broadcast hint on
+    ``right`` carries through). A pair colliding under several keys is
+    emitted once, by the final ``distinct``.
+
+    ``max_bucket_size`` drops key groups with more rows than the cap (on
+    either side) before the join, as one window count whose shuffle the
+    join reuses — a recall knob that bounds the worst group at
+    quadratic-in-cap; a pair survives if any of its groups does."""
+
+    def capped(df: DataFrame) -> DataFrame:
+        if max_bucket_size is None:
+            return df
+        return (
+            df.withColumn("_n", F.count("*").over(Window.partitionBy(*keys)))
+            .where(F.col("_n") <= max_bucket_size)
+            .drop("_n")
+        )
+
+    a = capped(left)
+    b = a if right is None else capped(right)
+    pairs = a.select(F.col(id_col).alias("id_a"), *keys).join(
+        b.select(F.col(id_col).alias("id_b"), *keys), keys
+    )
+    if right is None:
+        pairs = pairs.where(F.col("id_a") < F.col("id_b"))
+    return pairs.select("id_a", "id_b").distinct()
 
 
 def lsh_candidate_pairs(
@@ -169,44 +220,15 @@ def lsh_candidate_pairs(
     pair. Emits distinct (id_a < id_b). The band bucket is the shuffle key;
     hot buckets (boilerplate docs) are the skew to salt/cap at scale.
 
-    Round-13 (the lsh_near_pairs emit-once pattern, guide §2.4): a pair
-    agreeing in several bands used to be emitted once per band and
-    deduplicated by a global `.distinct()` — an exchange of the full
-    collision-incidence mass plus a hash aggregate over every candidate,
-    whose map-side partial agg removes ~nothing (a pair's duplicates live
-    under different (band, bucket) keys). Each exploded row now carries
-    the doc's full per-band bucket array (`bands` longs), and the
-    self-join emits a pair only at its FIRST agreeing band — unique by
-    construction, so the distinct exchange + aggregate are gone and the
-    pair SET is identical (every agreeing pair has a first agreeing
-    band)."""
-    band_hashes = [
-        F.xxhash64(F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band))
-        for b in range(bands)
-    ]
-    withb = signatures.select(
-        F.col(id_col), F.array(*band_hashes).alias("_bkts")
-    )
-    buckets = withb.select(
-        F.col(id_col), "_bkts", F.posexplode("_bkts").alias("band", "bucket")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    first_match = F.array_position(
-        F.zip_with(F.col("a._bkts"), F.col("b._bkts"), lambda x, y: x == y),
-        F.lit(True),
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .where(first_match == F.col("a.band").cast("long") + F.lit(1))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+    ``band_buckets`` + ``banded_candidates``, whose plain ``distinct`` is
+    kept on measurement: round 13's first-match "emit-once" filter cost
+    embedding_dedup_clusters 3.95 s -> 12.43 s, and a probe found
+    ``distinct`` faster in both the dense and the sparse regime (ROADMAP
+    item 2 table)."""
+    return banded_candidates(
+        band_buckets(signatures, id_col, sig_col, bands, rows_per_band),
+        ["band", "bucket"],
+        id_col,
     )
 
 
@@ -216,14 +238,17 @@ def verify_jaccard(
     id_col: str = "doc_id",
     shingles_col: str = "shingles",
     threshold: float = 0.2,
+    right: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-verify candidate pairs: join shingle sets back and compute true
     Jaccard via array intersection (candidates are few, so the per-pair
-    intersect is cheap and stays JVM-side)."""
+    intersect is cheap and stays JVM-side). id_a's set comes from
+    ``shingled``, id_b's from ``right`` (default: ``shingled``), matching
+    ``banded_candidates``."""
     sh_a = shingled.select(
         F.col(id_col).alias("id_a"), F.col(shingles_col).alias("sh_a")
     )
-    sh_b = shingled.select(
+    sh_b = (shingled if right is None else right).select(
         F.col(id_col).alias("id_b"), F.col(shingles_col).alias("sh_b")
     )
     joined = candidates.join(sh_a, "id_a").join(sh_b, "id_b")
@@ -265,7 +290,7 @@ def minhash_near_dup_pairs(
     streaming sink: an unreleased persist per micro-batch pins executor
     storage without bound).
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     if max_df is not None:
         shingled = drop_hot_shingles(shingled, max_df, id_col, shingles_col)
     # The shingle frame feeds signature generation AND both sides of the
@@ -375,7 +400,7 @@ def minhash_near_dup_pairs_two_phase(
             f"eps must be >= 0 (got {eps}); a negative band would route "
             "below-threshold pairs to signature acceptance"
         )
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     if max_df is not None:
         shingled = drop_hot_shingles(shingled, max_df, id_col, shingles_col)
     if persist:
@@ -496,26 +521,13 @@ def simhash_near_pairs(
             )
         )
     buckets = fingerprints.select(
-        F.col(id_col), F.col(sim_col), F.explode(F.array(*chunk_cols)).alias("cc")
-    ).select(
-        id_col, sim_col, F.col("cc.chunk").alias("chunk"), F.col("cc.val").alias("val")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
+        F.col(id_col), F.explode(F.array(*chunk_cols)).alias("cc")
+    ).select(id_col, F.col("cc.chunk").alias("chunk"), F.col("cc.val").alias("val"))
+    sims = fingerprints.select(id_col, sim_col)
     cands = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{sim_col}").alias("sim_a"),
-            F.col(f"b.{sim_col}").alias("sim_b"),
-        )
-        .distinct()
+        banded_candidates(buckets, ["chunk", "val"], id_col)
+        .join(sims.toDF("id_a", "sim_a"), "id_a")
+        .join(sims.toDF("id_b", "sim_b"), "id_b")
     )
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
@@ -579,38 +591,26 @@ def incremental_near_dup_matches(
     """
     from pyspark import StorageLevel
 
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     corpus_shingled = corpus_shingled.persist(StorageLevel.MEMORY_AND_DISK)
     batch_shingled = batch_shingled.persist(StorageLevel.MEMORY_AND_DISK)
     c_sigs = minhash_signatures(corpus_shingled, id_col, shingles_col, num_hashes, seed)
     b_sigs = minhash_signatures(batch_shingled, id_col, shingles_col, num_hashes, seed)
 
-    cands = (
-        band_buckets(b_sigs, id_col, "sig", bands, rows_per_band, out_id="batch_id")
-        .join(
-            band_buckets(
-                c_sigs, id_col, "sig", bands, rows_per_band, out_id="corpus_id"
-            ),
-            ["band", "bucket"],
-        )
-        .select("batch_id", "corpus_id")
-        .distinct()
+    cands = banded_candidates(
+        band_buckets(b_sigs, id_col, "sig", bands, rows_per_band),
+        ["band", "bucket"],
+        id_col,
+        right=band_buckets(c_sigs, id_col, "sig", bands, rows_per_band),
     )
-    sh_b = batch_shingled.select(
-        F.col(id_col).alias("batch_id"), F.col(shingles_col).alias("sh_a")
-    )
-    sh_c = corpus_shingled.select(
-        F.col(id_col).alias("corpus_id"), F.col(shingles_col).alias("sh_b")
-    )
-    joined = cands.join(sh_b, "batch_id").join(sh_c, "corpus_id")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    return (
-        joined.withColumn("n_common", inter.cast("bigint"))
-        .withColumn("n_union", union.cast("bigint"))
-        .withColumn("jaccard", inter.cast("double") / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("batch_id", "corpus_id", "n_common", "n_union", "jaccard")
+    return verify_jaccard(
+        cands, batch_shingled, id_col, shingles_col, threshold, right=corpus_shingled
+    ).select(
+        F.col("id_a").alias("batch_id"),
+        F.col("id_b").alias("corpus_id"),
+        "n_common",
+        "n_union",
+        "jaccard",
     )
 
 

@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datafusion_dedup_ai_spark.operators.dedup import banded_candidates
 from datafusion_dedup_ai_spark.operators.similarity_search import (
     cosine_with_norms,
     self_dot,
@@ -426,17 +427,9 @@ def ivfpq_topk(
     )
     q_cells = ivf_assign_cells(queries, centroids, id_col, vec_col, nprobe=nprobe)
     cand = (
-        q_cells.alias("q")
-        .join(
-            c_cells.alias("c"),
-            (F.col("q.cell") == F.col("c.cell"))
-            & (F.col(f"q.{id_col}") != F.col(f"c.{id_col}")),
-        )
-        .select(
-            F.col(f"q.{id_col}").alias("query_id"),
-            F.col(f"c.{id_col}").alias("neighbor_id"),
-        )
-        .distinct()
+        banded_candidates(q_cells, ["cell"], id_col, right=c_cells)
+        .where(F.col("id_a") != F.col("id_b"))
+        .toDF("query_id", "neighbor_id")
     )
 
     books = (

@@ -4022,18 +4022,8 @@ def q_fuzzy_benchmark_contamination(
     is_bench = F.col("doc_id") % BENCHMARK_MOD == 0
     bench_b = buckets.where(is_bench)
     train_b = buckets.where(~is_bench)
-    cand = (
-        train_b.alias("t")
-        .join(
-            F.broadcast(bench_b.alias("e")),
-            (F.col("t.band") == F.col("e.band"))
-            & (F.col("t.bucket") == F.col("e.bucket")),
-        )
-        .select(
-            F.col("t.doc_id").alias("id_a"),
-            F.col("e.doc_id").alias("id_b"),
-        )
-        .distinct()
+    cand = D.banded_candidates(
+        train_b, ["band", "bucket"], "doc_id", right=F.broadcast(bench_b)
     )
     verified = D.verify_jaccard(
         cand, shingled, threshold=_JACCARD_T

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datafusion_dedup_ai_spark.operators import similarity_search as S
+from datafusion_dedup_ai_spark.operators.dedup import banded_candidates
 from datafusion_dedup_ai_spark.registry import register
 from datafusion_dedup_ai_spark.sources.readers import load_spread, load_table
 
@@ -441,21 +442,7 @@ def q_lsh_width_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     for mode, bits in (("fixed", 4), ("adaptive", S.lsh_bits_schedule(n))):
         b = S.lsh_bucketize(emb, n_tables=16, n_bits=bits, seed=7)
-        cand = (
-            b.alias("a")
-            .join(
-                b.alias("b"),
-                (F.col("a.table") == F.col("b.table"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(
-                F.col("a.vec_id").alias("id_a"),
-                F.col("b.vec_id").alias("id_b"),
-            )
-            .distinct()
-            .persist()
-        )
+        cand = banded_candidates(b, ["table", "bucket"], "vec_id").persist()
         va = emb.select(
             F.col("vec_id").alias("id_a"),
             F.col("embedding").alias("va"),

@@ -508,7 +508,7 @@ def test_greedy_min_id_dropped_chain_vs_naive(spark):
 # Property: leader dedup == sequential reference on arbitrary graphs
 # ---------------------------------------------------------------------------
 
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 _edges = st.lists(
@@ -767,3 +767,85 @@ def test_index_meta_records_modulus(spark, shingled, tmp_path):
         json.dump(legacy, f)
     with pytest.raises(ValueError, match="signature generations"):
         MI.append_minhash_index(shingled, path)
+
+
+# ---------------------------------------------------------------------------
+# banded_candidates: the one candidate join behind every banded tier
+# ---------------------------------------------------------------------------
+
+_band_rows = st.lists(
+    st.tuples(st.integers(0, 7), st.integers(0, 1), st.integers(0, 2)),
+    max_size=24,
+)
+
+
+def _shared_key_pairs(left, right, cap, self_join):
+    """Brute force: (a, b) such that a's and b's rows share at least one
+    (band, key) group that no side holds more than ``cap`` rows of."""
+    from collections import Counter
+
+    n_left = Counter((band, key) for _, band, key in left)
+    n_right = Counter((band, key) for _, band, key in right)
+    kept = {
+        g
+        for g in n_left
+        if cap is None or (n_left[g] <= cap and n_right[g] <= cap)
+    }
+    return {
+        (a, b)
+        for a, ba, ka in left
+        for b, bb, kb in right
+        if (ba, ka) == (bb, kb)
+        and (ba, ka) in kept
+        and (a < b or not self_join)
+    }
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(left=_band_rows, right=_band_rows, cap=st.none() | st.integers(1, 4))
+# A group dropped on one side only: the cap applies to each input frame.
+@example(
+    left=[(1, 0, 0), (2, 0, 0), (3, 0, 0), (1, 1, 1), (2, 1, 1)],
+    right=[(4, 0, 0), (5, 1, 1), (6, 1, 1), (7, 1, 1)],
+    cap=2,
+)
+def test_banded_candidates_equals_brute_force(spark, left, right, cap):
+    """Self-join and left-vs-right pair sets equal the brute-force "shares
+    at least one (band, key)" set, with and without the group-size cap — so
+    with the cap no pair comes only from a dropped group, and no pair that
+    a surviving group vouches for is lost."""
+    schema = "id long, band int, key long"
+    lf = spark.createDataFrame(left, schema)
+    rf = spark.createDataFrame(right, schema)
+
+    def got(**kw):
+        out = D.banded_candidates(
+            lf, ["band", "key"], "id", max_bucket_size=cap, **kw
+        ).collect()
+        pairs = [(r["id_a"], r["id_b"]) for r in out]
+        assert len(pairs) == len(set(pairs)), "pairs must be distinct"
+        return set(pairs)
+
+    assert got() == _shared_key_pairs(left, left, cap, self_join=True)
+    assert got(right=rf) == _shared_key_pairs(left, right, cap, self_join=False)
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(8, 16), (64, 24), (64, 0)])
+def test_degenerate_banding_raises_before_any_spark_job(spark, num_hashes, bands):
+    """bands > num_hashes would hash empty slices into one bucket per band
+    (a quadratic candidate join); a remainder would silently drop trailing
+    hashes. Both raise a ValueError at plan-build time, before any job."""
+    sc = spark.sparkContext
+    sh = spark.createDataFrame([(1, ["a b"]), (2, ["a b"])], ["doc_id", "shingles"])
+    sc.setJobGroup("degenerate-banding", "must stay empty")
+    try:
+        with pytest.raises(ValueError, match="must be >= 1 and divide"):
+            D.minhash_near_dup_pairs(sh, num_hashes=num_hashes, bands=bands)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("degenerate-banding")) == []

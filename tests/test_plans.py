@@ -306,3 +306,46 @@ def test_incremental_cluster_update_plan_shape(spark, sf_dir):
     assert "FlatMapGroupsInPandas" in text, "routed union-find missing"
     assert count_uncached(root, "FlatMapGroupsInPandas") <= 1
     assert count_uncached(root, "Window") == 1, "sizes must be one window"
+
+
+def test_lsh_candidate_pairs_joins_on_band_keys_then_distinct(spark, sf_dir):
+    """The banded MinHash candidate join carries no array payload: the
+    executed plan has no first-match lambda (array_position / zip_with),
+    joins on exactly (band, bucket), and dedupes pairs with a HashAggregate
+    above the join. An array column on the join side ran the JVM out of
+    heap at 400k rows when the planner chose to broadcast it."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from datafusion_dedup_ai_spark.operators import dedup as D
+    from datafusion_dedup_ai_spark.sources.readers import load_table
+
+    # Word sets as shingles: the n-gram shingler itself uses zip_with.
+    docs = load_table(spark, sf_dir, "documents")
+    sigs = D.minhash_signatures(
+        docs.select("doc_id", F.array_distinct(F.split("text", " ")).alias("shingles"))
+    )
+    qe = D.lsh_candidate_pairs(sigs)._jdf.queryExecution()
+    text = qe.executedPlan().toString()
+    assert "array_position" not in text and "zip_with" not in text
+
+    def names(keys) -> set:
+        return {
+            re.sub(r"#\d+L?$", "", keys.apply(i).toString())
+            for i in range(keys.size())
+        }
+
+    joins = []  # (left keys, right keys, under a HashAggregate?)
+
+    def walk(node, under_agg: bool) -> None:
+        name = node.getClass().getSimpleName()
+        if name.endswith("JoinExec"):
+            joins.append((names(node.leftKeys()), names(node.rightKeys()), under_agg))
+        under_agg = under_agg or name == "HashAggregateExec"
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), under_agg)
+
+    walk(_unwrap_aqe(qe.executedPlan()), False)
+    assert joins == [({"band", "bucket"}, {"band", "bucket"}, True)], joins
